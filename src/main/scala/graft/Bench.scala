@@ -21,20 +21,14 @@ object Bench {
     // optimized to 0.45 s — the exact failure mode §1.4 warns about).
     // The paired DuckDB harness always materialized full results
     // (fetchall), so count-based ratios silently flattered the Spark
-    // side on value-heavy queries. GRAFT_BENCH_ACTION=count keeps the
-    // old action runnable for cross-methodology bridges (the r10
-    // OPTIMIZATION doc carries the per-query bridge table).
-    val legacyCount = sys.env.get("GRAFT_BENCH_ACTION").contains("count")
-    System.err.println(s"[bench] timed action=${if (legacyCount) "count" else "noop"}")
+    // side on value-heavy queries (the r10 OPTIMIZATION doc carries
+    // the per-query count-vs-noop bridge table).
     // A crashing bench op must fail the run LOUDLY: swallowing it
     // would record a ~0 s "time" for the op and the headline total
     // would IMPROVE on a regression that broke the query.
     def runOnce(op: Op): Unit =
-      try {
-        val df = op.run(spark, sfDir)
-        if (legacyCount) { df.count(); () }
-        else df.write.format("noop").mode("overwrite").save()
-      } catch {
+      try op.run(spark, sfDir).write.format("noop").mode("overwrite").save()
+      catch {
         case e: Throwable =>
           System.err.println(s"[bench] FATAL: ${op.name} failed: $e")
           spark.stop()

@@ -2,25 +2,21 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Dev tool (r9, VERDICT r8 #2): build a FULL-REFERENTIAL ≈sf1 dataset
-  * for the registry-wide correctness sweep — every fact AND dim table
+/** Dev tool: build a FULL-REFERENTIAL ≈sf1 dataset for the
+  * registry-wide correctness sweep — every fact AND dim table
   * replicated `reps`× with CONSISTENT key offsets, so joins match in
-  * every replica (DevScaleProbe's bench-oriented builder replicates
-  * only events/orders/lineitem; its offset keys join only replica 0 of
-  * the untouched dims — fine for timing one family, wrong for a
-  * whole-registry correctness stress). region/nation stay symlinked:
-  * their keys (c_nationkey etc.) are NOT offset, so FK integrity
-  * holds by construction.
+  * every replica. region/nation stay symlinked: their keys
+  * (c_nationkey etc.) are NOT offset, so FK integrity holds by
+  * construction. [[DevSqlReplay]] reads its output when `reps > 1`.
   *
   * Key offsets are r*3 600 000 000; the EVENTS replica additionally
   * shifts ts by +30r DAYS so replicas live in DISJOINT time buckets —
   * the contact graph ((cell, time-bucket) co-location) grows ~linearly
-  * (reps× nodes/edges), like a corpus collected reps× longer. This is
-  * a deliberate departure from DevScaleProbe's geography-preserving
-  * replication (density ×reps ⇒ pair volume ×reps², the right stress
-  * for the targeted events-family probe, already recorded in BENCH.md
-  * r16): a FULL-registry correctness sweep at ×reps² contact density
-  * puts every wedge/triangle-shaped graph query into quadratic
+  * (reps× nodes/edges), like a corpus collected reps× longer. A
+  * geography-preserving replication (density ×reps ⇒ pair volume
+  * ×reps², the events-family stress recorded in BENCH.md r16) would
+  * not do here: a FULL-registry correctness sweep at ×reps² contact
+  * density puts every wedge/triangle-shaped graph query into quadratic
   * territory (clustering_coefficient alone sat >15 min at 10× density,
   * wedge volume ~×1000 — and note lon spans only 3600 buckets, so an
   * id-shift "geography spread" just rotates within the SAME cells; the
@@ -58,8 +54,10 @@ object DevScaleData {
     val done = new java.io.File(s"$out/_done")
     if (done.exists()) return out
     new java.io.File(out).mkdirs()
-    // single part file published as a plain .parquet FILE, 16 MB row
-    // groups (scan parallelism at probe scale — the DevScaleProbe note)
+    // single part file published as a plain .parquet FILE (the layout
+    // the DuckDB side globs), 16 MB row groups: a coalesce(1) file with
+    // the 128 MB default leaves 1-2 row groups, and Spark's scan
+    // parallelism is bounded by row-group count
     def publish(df: org.apache.spark.sql.DataFrame, t: String): Unit = {
       df.coalesce(1).write.mode("overwrite")
         .option("parquet.block.size", 16 * 1024 * 1024)

@@ -216,26 +216,6 @@ object GraftFunctions {
         CappedCollectAgg(es(0), lim.asInstanceOf[Number].intValue())
           .toAggregateExpression()
       }),
-    ("pcy_sketch", "pcy_sketch(hash, bits) - saturating bucket-count sketch (PCY candidate pass)",
-      es => {
-        require(es(1).foldable, "pcy_sketch: bits must be a literal")
-        val bits = es(1).eval()
-        require(bits != null, "pcy_sketch: bits must be non-null")
-        PcySketchAgg(es(0), bits.asInstanceOf[Number].intValue())
-          .toAggregateExpression()
-      }),
-    ("pcy_prune", "pcy_prune(hash, sketch, min) - bucket upper bound reaches min",
-      es => {
-        require(es(2).foldable, "pcy_prune: min must be a literal")
-        val min = es(2).eval()
-        require(min != null, "pcy_prune: min must be non-null")
-        val m = min.asInstanceOf[Number].intValue()
-        if (es(1).foldable) {
-          val sk = es(1).eval()
-          require(sk != null, "pcy_prune: sketch must be non-null")
-          PcyPruneExpr(es(0), sk.asInstanceOf[Array[Byte]], m)
-        } else PcyPruneSubqueryExpr(es(0), es(1), m)
-      }),
     ("bloom_might_contain", "bloom_might_contain(key, bloom) - probe a build-time bloom filter",
       es => {
         require(es(1).foldable,

@@ -251,12 +251,17 @@ case class PostingPairsExpr(child: Expression) extends UnaryExpression {
     StructField("p", LongType, nullable = false),
     StructField("na2", LongType, nullable = false),
     StructField("nb2", LongType, nullable = false))), containsNull = false)
+  // by field NAME, not just shape: the kernel reads the struct
+  // positionally, so a reordered (tf, doc_id, n2) would swap ids and
+  // payloads silently
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StructType(fs), _) if fs.length == 3 &&
-      fs.forall(_.dataType == LongType) =>
+    case ArrayType(StructType(fs), _)
+        if fs.map(_.name).toSeq == Seq("doc_id", "tf", "n2") &&
+          fs.forall(_.dataType == LongType) =>
       TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(
-      s"posting_pairs expects ARRAY<STRUCT<BIGINT, BIGINT, BIGINT>>, got ${t.sql}")
+      "posting_pairs expects ARRAY<STRUCT<doc_id: BIGINT, tf: BIGINT, " +
+        s"n2: BIGINT>>, got ${t.sql}")
   }
   override def nullSafeEval(a: Any): Any =
     PostingPairHelpers.postingPairs(a.asInstanceOf[ArrayData])

@@ -20,15 +20,21 @@ object Sbm {
 
   /** nodes: (node_id long, block string) built from per-block sizes —
     * contiguous id ranges per block, matching the reference's
-    * node-ordering convention.
+    * node-ordering convention. The blocks are ONE local (block, lo, n)
+    * relation exploded over each id range, not a union of per-block
+    * ranges: a union's literal blocks become a disjunction as deep as
+    * the block count, which overflows the stack once it is pushed into
+    * a cached scan (1,000 blocks). Empty blocks yield no nodes, and
+    * dropping them first keeps `sequence` from counting down.
     */
   def nodes(spark: SparkSession, sizes: Seq[(String, Long)]): DataFrame = {
     import spark.implicits._
     val offsets = sizes.scanLeft(0L)(_ + _._2)
-    val ranges = sizes.zip(offsets).map { case ((b, n), off) => (b, off, off + n) }
-    ranges.map { case (b, lo, hi) =>
-      spark.range(lo, hi).select(col("id").as("node_id"), lit(b).as("block"))
-    }.reduce(_ unionByName _)
+    sizes.zip(offsets)
+      .collect { case ((b, n), lo) if n > 0 => (b, lo, n) }
+      .toDF("block", "lo", "n")
+      .select(explode(sequence(col("lo"), col("lo") + col("n") - 1))
+        .as("node_id"), col("block"))
   }
 
   /** Seeded SBM edges: upper-triangle pairs filtered by the block-pair

@@ -850,7 +850,7 @@ object Curation {
     */
   /** DSIR importance weights via the per-document bucket HISTOGRAM
     * kernel (`gram_bucket_hist` — one codegen'd byte-scan per doc, no
-    * gram explode). The r10 A/B (DevAbDsir) showed every explode
+    * gram explode). The r10 A/B showed every explode
     * spelling loses to the same vectorized-agg constant as CF, so the
     * SHAPE changed (the r19 lesson): pass 1 aggregates the in-row
     * histograms down to the B=128 bucket totals (partial agg reduces

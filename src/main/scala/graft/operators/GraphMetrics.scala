@@ -1004,8 +1004,8 @@ object GraphMetrics {
     *  - dense + node-bounded (this co-location graph: n≈1.5k/d≈278 at
     *    sf0.1, n≈7.5k/d≈1394 at ≈sf1) → [[jaccardLinksBitset]]: the
     *    wedge join flows Σd² = n·d² rows through a hash aggregate
-    *    (7.4 G rows at 5×, 105 GB of partial-agg spill measured by
-    *    DevJacAb — the 346 s ≈sf1 sweep entry), while a bitset
+    *    (7.4 G rows at 5×, 105 GB of partial-agg spill measured in
+    *    the 346 s ≈sf1 sweep entry), while a bitset
     *    adjacency matrix is only n²/8 bytes (7 MB!) and one AND+popcnt
     *    word-loop answers cn, BOTH degrees, and the existing-edge test
     *    with zero joins, zero wedge shuffle.
@@ -1061,7 +1061,7 @@ object GraphMetrics {
     // edge array locally. This removes, per dense query at bench SF,
     // the persist, the degree pre-aggregate (a self-union + exchange
     // + agg over e) and the separate edge-collect job — 2 of the 3
-    // chained chooser jobs (DevGraphDecomp r10: nd 1.5 s +
+    // chained chooser jobs (r10 decomposition: nd 1.5 s +
     // collectBuild 0.16 s warm). The co-location distinct is still
     // computed exactly once on either outcome; graphs past the bound
     // keep the persisted two-pass chooser below.

@@ -195,9 +195,9 @@ object Interactions {
     * downgrade to broadcast at toy SF; the hint keeps the plan
     * shuffle-shaped where it matters.
     */
-  /** The r2–r6 two-join spelling, kept for the A/B harness
-    * (DevContactsAB) and the equivalence spec: pairs explode unlabeled,
-    * then two device-key shuffle-hash joins attach the homes. Replaced
+  /** The r2–r6 two-join spelling, kept only as the equivalence spec's
+    * reference: pairs explode unlabeled, then two device-key
+    * shuffle-hash joins attach the homes. Replaced
     * as the registered query by [[observedContacts]] (the fused
     * spelling) in r7 — measured 0.65 → 0.50 s at sf0.1 with identical
     * results; at 100 TB the win grows, because the two joins this

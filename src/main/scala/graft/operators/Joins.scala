@@ -114,7 +114,7 @@ object Joins {
     // let AQE broadcast the ~570k-row distinct relation at bench SF
     // (measured: the single-threaded broadcast build dominated the
     // query) and that key relation is corpus-scale at 100 TB, where a
-    // broadcast cannot exist at all. DevJbAb A/B, identical checksums:
+    // broadcast cannot exist at all. r11 A/B, identical checksums:
     // sf0.1 0.376 vs 1.044 s (2.8×), 10× full-referential 0.860 vs
     // 1.283 s. The verdict's other candidate — a Bloom/semi-join
     // prune — is structurally inapplicable here: the join is LEFT and

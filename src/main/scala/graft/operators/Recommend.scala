@@ -13,10 +13,7 @@ import graft.{Op, Tables}
   * Scale shapes: both co-occurrence ops BLOCK on the grouping entity
   * (order / customer) — never all-pairs over items — via ONE
   * collect_set shuffle + in-group pair explode (the interaction_pairs
-  * discipline); a PCY candidate pass can prune the pair exchange for
-  * network-bound deployments (opt-in — see pairCounts and BENCH.md's
-  * r8 A/B). Fan-out is bounded by basket
-  * size (≤ C(13,2)
+  * discipline). Fan-out is bounded by basket size (≤ C(13,2)
   * pairs per order here, physically bounded by order volume
   * everywhere); per-user histories are quadratic, so users above the
   * history cap are cut BEFORE pairing — a free size() filter on the
@@ -30,39 +27,6 @@ import graft.{Op, Tables}
   */
 object Recommend {
 
-  /** Exact thresholded pair counts over per-entity item sets: the
-    * in-group explode emits each a<b pair once (`pair_structs`, one
-    * codegen'd kernel), shuffled on (ia, ib) into the exact count.
-    *
-    * `usePcy = true` adds the PCY candidate pass
-    * (functions/PcyExpressions.scala) pruning the pair exchange: a
-    * map-side bucket sketch (one row, 2^bits saturating byte counters)
-    * upper-bounds every pair's count, and only pairs whose bucket
-    * reaches `minCount` are shuffled into the exact groupBy — the
-    * survivors' counts are exact, and no qualifying pair can be
-    * dropped (collisions only over-count). The sketch is collected
-    * once and probed through a constant-reference codegen'd predicate
-    * (NOT passed as a column: UnsafeRow.getBinary would re-copy the
-    * whole array per probed row — measured as a multi-minute stall).
-    * At sf0.1 this cuts the CF pair shuffle from ~10.4M rows to ~400k.
-    *
-    * DEFAULT IS DIRECT (r8 A/B + structural analysis, BENCH.md): PCY
-    * lost at every local scale and sizing tried, and the loss is
-    * structural, not environmental. To prune at pair volume P the
-    * sketch needs ~P/1.5 buckets; the buckets are a PER-TASK partial
-    * buffer, so the sketch's own merge traffic is tasks × 2^bits ≈
-    * tasks × P/1.5 bytes — more than the 16-byte/pair shuffle it
-    * replaces whenever tasks > ~24. Undersized, it saturates
-    * (λ ≫ 1 ⇒ nothing pruned, measured at 10×: the r7-sized 2²³
-    * sketch passed 100% of 104M pairs); sized up, the partial
-    * allocation alone (cores × 2^bits) OOMs before the traffic wall.
-    * PCY is a single-shared-hash-table trick: the opt-in
-    * (explicit `usePcy` param ONLY — r8 advice: an environment-read
-    * default let an inherited variable silently flip the contracted
-    * plan shape under tests and bench) serves the single-node/
-    * moderate-volume regime where that table exists — which a test
-    * fixture is and a 1000-executor shuffle is not.
-    */
   /** Packability chooser for [[pairCounts]]' 8-byte packed pair keys:
     * true iff every l_partkey fits an unsigned 32-bit value, proven by
     * MIN/MAX over the one key column (r11, guide §2.3 — narrower types
@@ -137,17 +101,20 @@ object Recommend {
     if (trusted && seen) Some((mn, mx)) else None
   } catch { case scala.util.control.NonFatal(_) => None }
 
+  /** Exact thresholded pair counts over per-entity item sets: the
+    * in-group explode emits each a<b pair once, shuffled on the pair
+    * into the exact count. `packU32` (the [[itemIdsPackU32]] chooser's
+    * answer) picks the packed-long spelling (`pair_longs`) over the
+    * two-field struct (`pair_structs`). No candidate pass prunes the
+    * pair exchange: a PCY sketch lost at every scale measured
+    * (BENCH.md r8/r16), since its per-task partials outweigh the
+    * shuffle they save.
+    */
   private[graft] def pairCounts(
-      sets0: DataFrame, minCount: Int, bits: Int = 23,
-      usePcy: Boolean = false, packU32: Boolean = false)
+      sets0: DataFrame, minCount: Int, packU32: Boolean = false)
       : DataFrame = {
-    require(minCount >= 1 && minCount <= Byte.MaxValue,
-      s"pairCounts: minCount must fit the sketch's byte counters, got $minCount")
-    // PCY can pay only when the threshold prunes: a count-1 pair
-    // survives a t=2 prune whenever its bucket takes ONE more hit
-    // (1-e^-λ — no real selectivity at any sizing); t≥3 is where the
-    // tail P(Poisson(λ) ≥ t-1) collapses, so t<3 is always direct.
-    if (packU32 && !usePcy) {
+    require(minCount >= 1, s"pairCounts: minCount must be >= 1, got $minCount")
+    if (packU32) {
       // r11 (guide §2.3, VERDICT r10 #1): when the caller's chooser
       // proves every item id < 2^32, the pair rides ONE packed long —
       // (min << 32) | max — through Generate, the exchange and the
@@ -163,56 +130,13 @@ object Recommend {
         .select(shiftrightunsigned(col("pk"), 32).as("ia"),
           col("pk").bitwiseAND(lit(0xFFFFFFFFL)).as("ib"), col("co"))
     }
-    if (minCount < 3 || !usePcy) {
-      // NOT a groupBy-planned exchange: the explicit raw repartition
-      // beats map-side partial agg here (r8 A/B "direct-v2") — pairs
-      // are near-unique within a task, so the partial hash build
-      // reduces little and costs ~30% at 10× scale.
-      val pairs = sets0
-        .select(explode(call_function("pair_structs", col("items"))).as("p"))
-        .select(col("p.ia").as("ia"), col("p.ib").as("ib"))
-      return pairs
-        .repartition(col("ia"), col("ib"))
-        .groupBy(col("ia"), col("ib"))
-        .agg(count(lit(1)).as("co"))
-        .where(col("co") >= minCount)
-    }
-    // The sketch is a SCALAR SUBQUERY, so the whole prune is one
-    // declarative query: the subquery runs once per execution (its
-    // 2^bits-byte result — 8 MB at the default — enters the probe as a
-    // plan literal, the bounded-collect discipline of the k-means
-    // centroids), and physical planning's exchange reuse lets the
-    // subquery and the main pair explode share the sets exchange. No
-    // checkpoint, no extra action, still fully lazy.
-    // The pair hash is PROJECTED below the sketch aggregate, not
-    // nested inside it: a TypedImperativeAggregate evaluates its child
-    // interpreted per input row, so xxhash64 must run in the codegen'd
-    // projection underneath — the aggregate's update then only reads a
-    // long field (measured ~1 s/10M rows difference at sf0.1).
-    // pair_structs emits exactly n(n-1)/2 canonical pairs per set in
-    // one codegen'd kernel — the double-explode idiom it replaces
-    // flowed n² rows and filtered half (measured ~2x the generate
-    // volume on the CF pipeline).
-    // The explode stage's INPUT is small (one row per entity) but its
-    // CPU is pair-volume (n(n-1)/2 per set): AQE coalesces the sets
-    // exchange by BYTES, so the heaviest stage of the query ran on
-    // 3-5 of 32 cores (r7 profile: 0.5 s stages at task count 3). The
-    // round-robin respread is an exchange of the SMALL relation that
-    // buys full parallelism for the big CPU; both the sketch subquery
-    // and the main probe hang off the one respread exchange
-    // (ReusedExchange).
-    val spread = sets0.repartition(
-      sets0.sparkSession.sparkContext.defaultParallelism)
-    def pairs = spread
+    // NOT a groupBy-planned exchange: the explicit raw repartition
+    // beats map-side partial agg here (r8 A/B "direct-v2") — pairs
+    // are near-unique within a task, so the partial hash build
+    // reduces little and costs ~30% at 10× scale.
+    sets0
       .select(explode(call_function("pair_structs", col("items"))).as("p"))
-      .select(col("p.ia").as("ia"), col("p.ib").as("ib"),
-        xxhash64(col("p.ia"), col("p.ib")).as("pk"))
-    val sketch = pairs
-      .select(call_function("pcy_sketch", col("pk"), lit(bits)).as("sk")).scalar()
-    pairs.where(call_function("pcy_prune", col("pk"), sketch, lit(minCount)))
-      .drop("pk")
-      // survivors are few and near-unique: shuffle raw, aggregate once
-      // post-shuffle (a pre-shuffle partial agg reduces nothing here)
+      .select(col("p.ia").as("ia"), col("p.ib").as("ib"))
       .repartition(col("ia"), col("ib"))
       .groupBy(col("ia"), col("ib"))
       .agg(count(lit(1)).as("co"))
@@ -255,8 +179,7 @@ object Recommend {
     // Generate each unordered pair ONCE (a<b), mirror after the count:
     // co-occurrence is symmetric, so this halves both the generated
     // rows and the pair shuffle, and the mirror runs over the tiny
-    // thresholded result. minCount=2 always takes pairCounts' direct
-    // path — a t=2 prune has no selectivity (see pairCounts).
+    // thresholded result.
     val half = Recommend.pairCounts(sets, minCount = 2,
         packU32 = itemIdsPackU32(spark, dir))
       .withColumnRenamed("co", "pair_cnt")
@@ -306,17 +229,7 @@ object Recommend {
     * rounded 1e-9, RANKED ON THE ROUNDED VALUE so both engines break
     * ties identically.
     */
-  def itemItemCosine(spark: SparkSession, dir: String): DataFrame =
-    itemItemCosine(spark, dir, usePcy = false)
-
-  /** `usePcy` opts into the PCY sketch pass for network-bound
-    * deployments (see BENCH.md's PCY A/B table for the measured
-    * trade; default direct). Opt-in is by THIS parameter only —
-    * never an environment variable — so the registered query's
-    * contracted plan shape cannot flip under an inherited env.
-    */
-  def itemItemCosine(spark: SparkSession, dir: String,
-      usePcy: Boolean): DataFrame = {
+  def itemItemCosine(spark: SparkSession, dir: String): DataFrame = {
     // One shuffle on u; min_k_distinct dedups (u, i) during partial
     // agg IN an O(61) buffer — the 61st smallest item only proves the
     // history exceeds 60, so the size() gate below is the same
@@ -334,8 +247,8 @@ object Recommend {
       .where(size(col("items")) <= 60)
     val itemCnt = sets.select(explode(col("items")).as("i"))
       .groupBy(col("i")).agg(count(lit(1)).as("cnt"))
-    val co = Recommend.pairCounts(sets, minCount = 4, usePcy = usePcy,
-        packU32 = !usePcy && itemIdsPackU32(spark, dir))
+    val co = Recommend.pairCounts(sets, minCount = 4,
+        packU32 = itemIdsPackU32(spark, dir))
       .select(col("ia").as("item_a"), col("ib").as("item_b"), col("co"))
     val scored = co
       .join(itemCnt.withColumnRenamed("i", "item_a")

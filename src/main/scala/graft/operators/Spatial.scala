@@ -1462,7 +1462,7 @@ object Spatial {
     * strictly stronger than the geometric band — any drift in
     * latLngToCell, the lattice sampling, containment, or the sibling
     * folding flips the scorecard hash. The values were produced by the
-    * current implementation (DevH3Pins) and are trustworthy as pins
+    * current implementation and are trustworthy as pins
     * because the underlying kernels are independently verified against
     * published golden vectors and global properties in H3Spec; note
     * the count decreases with latitude exactly as res-4 hex area

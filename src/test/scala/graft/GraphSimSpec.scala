@@ -40,6 +40,27 @@ class GraphSimSpec extends AnyFunSuite {
     assert(aa > 40 && aa < 140, s"AA edges $aa out of plausible range")
   }
 
+  test("SBM: 1,000 blocks plus an empty one against a cached probability matrix") {
+    import spark.implicits._
+    // one node per block, then a zero-size block: the node relation
+    // must not grow with the block count in plan depth
+    val sizes = (0 until 1000).map(i => s"b$i" -> 1L) :+ ("empty" -> 0L)
+    val n = Sbm.nodes(spark, sizes)
+    assert(n.groupBy("block").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap ==
+      sizes.filter(_._2 > 0).toMap)
+    assert(n.select(col("node_id")).as[Long].collect().sorted.toSeq ==
+      (0L until 1000L))
+    // adjacent blocks always link: node i and i+1 are the only pair
+    val probs = (0 until 999).map(i => (s"b$i", s"b${i + 1}", 1.0))
+      .toDF("block_a", "block_b", "prob").cache()
+    try {
+      val e = Sbm.edges(spark, n, probs, seed = 7L)
+      assert(e.count() == 999)
+      assert(e.where(col("dst") =!= col("src") + 1).count() == 0)
+    } finally probs.unpersist()
+  }
+
   test("GraphML round-trip preserves vertices, attrs, and edges") {
     import spark.implicits._
     val sizes = Seq("A" -> 10L, "B" -> 5L)

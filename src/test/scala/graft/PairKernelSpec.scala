@@ -105,6 +105,20 @@ class PairKernelSpec extends AnyFunSuite {
     assert(viaKernel.size == 4 * 3 / 2 + 1) // C(4,2) + C(2,2)
   }
 
+  test("posting_pairs rejects a posting struct whose fields are reordered") {
+    import spark.implicits._
+    // same three BIGINTs, tf first: read positionally it would swap
+    // doc ids and term frequencies, so analysis must refuse it
+    val ps = Seq(Seq((5L, 2L, 29L), (1L, 3L, 14L))).toDF("raw")
+      .select(expr(
+        "transform(raw, r -> named_struct('tf', r._2, 'doc_id', r._1, 'n2', r._3))")
+        .as("ps"))
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      ps.select(explode(call_function("posting_pairs", col("ps")))).collect()
+    }
+    assert(e.getMessage.contains("posting_pairs expects"), e.getMessage)
+  }
+
   test("itemIdsPackU32 proves the bound from footers and routes correctly") {
     // the bench fixtures' partkeys fit u32; the 10× full-referential
     // replica offsets them past 2^32 — both routes are exercised by

@@ -347,48 +347,37 @@ class PlanContractSpec extends AnyFunSuite {
   test("sparse_cosine_pairs: one gram exchange + in-group pair explode, never all-pairs") {
     val p = finalPlan("sparse_cosine_pairs", "/root/testdata/sf0.01")
     // docs meet ONLY through the per-gram posting list: one exchange
-    // on the gram hash (ObjectHashAggregate collect_list), pairs
-    // explode in-group, then one exchange on the doc pair — no join
-    // of any kind, so no all-pairs path can exist
+    // on the gram hash (ObjectHashAggregate capped_collect), pairs
+    // explode in-group through the posting_pairs kernel, then one
+    // exchange on the doc pair — no join of any kind, so no all-pairs
+    // path can exist
     assert(p.contains("ObjectHashAggregate"),
       "posting lists must build on the gram exchange:\n" + p.take(2000))
-    assert(count(p, "Generate explode") >= 3,
-      "row-local tf explode + the two in-group pair explodes:\n" + p.take(2000))
+    assert(p.contains("posting_pairs"),
+      "pairs must come from the posting_pairs kernel:\n" + p.take(2000))
+    assert(count(p, "Generate explode") == 2,
+      "row-local tf explode + ONE in-group pair explode — a 3rd means " +
+        "the double-explode idiom is back:\n" + p.take(2000))
     assert(!p.contains("Join"), "no join of any kind — pairs form in-group")
     assert(count(p, "Exchange hashpartitioning") == 2,
       "exactly two corpus exchanges: gram postings + doc-pair agg:\n" + p.take(2000))
   }
 
   test("item_item_cosine (default): direct pair exchange, single explode, no sketch pass") {
-    // r8 A/B (BENCH.md): the PCY sketch pass re-runs the pair explode
-    // — the dominant CPU — and measured 0-45% slower at every local
-    // scale in BOTH prune-selectivity regimes, so the DEFAULT plan is
-    // the direct exchange. A second sketch pass appearing here means
-    // the default regressed to opt-in-PCY.
-    val p = finalPlan("item_item_cosine", "/root/testdata/sf0.01")
-    assert(!p.contains("pcy_prune") && !p.contains("pcy_sketch"),
-      "default must be the direct path — PCY is opt-in:\n" + p.take(2000))
+    val dir = new java.io.File(sf).getParent + "/sf0.01" // next to `sf`
+    val p = finalPlan("item_item_cosine", dir)
     assert(count(p, "Generate explode") == 2,
       "ONE pair explode + the itemCnt explode — a 3rd means a " +
         "duplicated pair pass:\n" + p.take(2000))
-    assert(count(p, "Exchange hashpartitioning(ia") == 1,
-      "exactly one pair exchange:\n" + p.take(2000))
-  }
-
-  test("item_item_cosine (usePcy): prune sits below the pair exchange") {
-    val df = operators.Recommend
-      .itemItemCosine(spark, "/root/testdata/sf0.01", usePcy = true)
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
-    val pruneIdx = p.indexOf("pcy_prune")
-    assert(pruneIdx >= 0, "the PCY candidate filter must be in the executed plan")
-    // the prune must run MAP-side of the pair repartition: the filter
-    // appears below (after, in toString order) the exchange that
-    // carries (ia, ib) — a prune above it would shuffle everything
-    val pairExchange = p.indexOf("Exchange hashpartitioning(ia")
-    assert(pairExchange >= 0 && pruneIdx > pairExchange,
-      "prune must be below the pair exchange (map-side):\n" + p.take(2000))
+    // the pair rides one packed long when every item id fits u32, the
+    // (ia, ib) struct otherwise — exactly one pair exchange either way
+    val (pairKey, otherKey) =
+      if (operators.Recommend.itemIdsPackU32(spark, dir))
+        ("Exchange hashpartitioning(pk", "Exchange hashpartitioning(ia")
+      else ("Exchange hashpartitioning(ia", "Exchange hashpartitioning(pk")
+    assert(count(p, pairKey) == 1, "exactly one pair exchange:\n" + p.take(2000))
+    assert(count(p, otherKey) == 0,
+      "the other pair spelling must not appear:\n" + p.take(2000))
   }
 
   test("grouped_topk_agg: bounded-heap agg — no window, no sort of the input") {

@@ -20,7 +20,7 @@ class SumOrderFreeSpec extends AnyFunSuite {
     s
   }
 
-  // seeded LCG (the PcySpec discipline); magnitudes span 9 orders so
+  // seeded LCG (reproducible trials); magnitudes span 9 orders so
   // partial sums genuinely lose different low bits in different orders
   private def values(n: Int): Seq[Double] = {
     var seed = 0x5deece66dL

@@ -14,7 +14,7 @@ import graft.functions.TopKPairsAgg
   * order, must produce exactly sort-take-k — the property that makes
   * the aggregate safe under Spark's nondeterministic partial
   * aggregation and AQE-coalesced merges. Deterministic pseudo-random
-  * trials (seeded LCG — the PcySpec discipline; scores draw from a
+  * trials (seeded LCG — reproducible; scores draw from a
   * small pool so TIES are common and the id tie-break path is the one
   * hammered).
   */

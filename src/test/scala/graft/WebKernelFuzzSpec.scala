@@ -11,7 +11,7 @@ import graft.operators.WebCuration
   * fragments — unterminated tags, bare `<`/`&`, entity debris,
   * lookalike params (`href=`, `prefix=`, path `/ref=x`), mixed-case
   * schemes/hosts, non-default ports — composed by a seeded LCG (the
-  * PcySpec/pickle-fuzz discipline). Catches codegen/escaping slips in
+  * pickle-fuzz discipline). Catches codegen/escaping slips in
   * the Column spelling that the fixture-shaped oracle can never reach,
   * and pins NULL-in → NULL-out.
   */
